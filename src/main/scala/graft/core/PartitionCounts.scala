@@ -43,17 +43,25 @@ object PartitionCounts {
     */
   def perPartition(df: DataFrame, table: String, partCols: Seq[String]): DataFrame = {
     require(partCols.nonEmpty, "perPartition requires at least one partition column")
-    val spec: Column = concat_ws("/",
-      partCols.map(c => concat_ws("=", lit(c), col(c).cast("string"))): _*)
     df.groupBy(partCols.map(col): _*)
       .agg(count(lit(1)).as("cnt"))
-      .select(lit(table).as("table"), spec.as("partition"), col("cnt"))
+      .select(lit(table).as("table"), spec(partCols).as("partition"), col("cnt"))
   }
+
+  /** The canonical `k=v[/k2=v2]` spec of a row's partition values. A NULL
+    * value renders as the bare key (`concat_ws` skips nulls).
+    */
+  def spec(partCols: Seq[String]): Column =
+    concat_ws("/", partCols.map(c => concat_ws("=", lit(c), col(c).cast("string"))): _*)
 
   /** Counts for a list of tables in one DataFrame: per-partition where
     * partition columns are given, whole-table otherwise. Mirrors the
     * reference's table loop (verizon_automation_script.sh:96-127) as a
-    * union of independent jobs — Spark schedules the scans concurrently.
+    * union inside ONE query. Each branch keeps its own aggregation, so
+    * the plan has one shuffle per table, each table is scanned once, and
+    * adaptive execution submits the T shuffle stages side by side.
+    * `ReconcilePipeline` does not use this: it folds every table and both
+    * sides into a single aggregation.
     */
   def forTables(
       spark: SparkSession,

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Source-vs-target reconciliation (SURVEY.md §2 J1/J2).
@@ -42,12 +42,15 @@ object Reconcile {
       coalesce(col("s.partition"), col("t.partition")).as("partition"),
       col("src_cnt"),
       col("tgt_cnt"),
-      when(col("src_cnt").isNull, MissingInSource)
-        .when(col("tgt_cnt").isNull, MissingInTarget)
-        .when(col("src_cnt") === col("tgt_cnt"), Matched)
-        .otherwise(Mismatched)
-        .as("status"))
+      status(col("src_cnt"), col("tgt_cnt")).as("status"))
   }
+
+  /** A cell's status from its two counts; a NULL count is a missing side. */
+  def status(srcCnt: Column, tgtCnt: Column): Column =
+    when(srcCnt.isNull, MissingInSource)
+      .when(tgtCnt.isNull, MissingInTarget)
+      .when(srcCnt === tgtCnt, Matched)
+      .otherwise(Mismatched)
 
   /** J1: the reference's MatchedData report. */
   def matched(report: DataFrame): DataFrame =

@@ -54,6 +54,13 @@ class FingerprintSpec extends SparkFunSuite {
     assert(got == Map("a" -> true, "b" -> false, "c" -> false))
   }
 
+  test("compare treats a NULL group key as one group present on both sides") {
+    val rows = Seq((1, Some("x")), (2, None), (3, None)).toDF("id", "p")
+    val got = Fingerprint.compare(rows, rows, Seq("p")).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
+    assert(got == Set((Some("x"), 1L, 1L, true), (None, 2L, 2L, true)))
+  }
+
   test("sampled digest is deterministic across physical layouts") {
     val df = Tables.lineitem(spark, sf001)
     val d1 = Fingerprint.sampled(df, "lineitem", 10).select("digest").head.getString(0)
