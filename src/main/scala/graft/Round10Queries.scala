@@ -419,10 +419,9 @@ object Round10Queries {
     // (dt, hr) cell, so multiset equality <=> equal counts — the same
     // shortcut as integrity_by_partition, now over two partition levels.
     // LEFT JOIN (not inner): a cell whose rows are ALL removed by the
-    // perturbation still appears in Fingerprint.compare's full-outer
-    // output with tgt_cnt NULL / consistent false — mirror that instead
-    // of silently shrinking the compared set if the fixture ever yields
-    // such a cell.
+    // perturbation still appears in Fingerprint.compare's output with
+    // tgt_cnt NULL / consistent false — mirror that instead of silently
+    // shrinking the compared set if the fixture ever yields such a cell.
     "integrity_multilevel" ->
       """WITH src AS (
         |  SELECT CAST(ts AS DATE) AS dt, hour(ts) AS hr, count(*) AS src_cnt

@@ -202,7 +202,7 @@ object CoreQueries {
     },
     // J1/J2: full reconciliation report — source vs deterministically
     // perturbed target (the 'R' partition loses every 97th order's rows),
-    // one full outer join over per-partition count records.
+    // one Reconcile.cells grouping over both sides' count records.
     "reconcile_report" -> { (s, dir) =>
       val li = Tables.lineitem(s, dir)
       val src = PartitionCounts.perPartition(li, "lineitem", Seq("l_returnflag"))
@@ -222,64 +222,45 @@ object CoreQueries {
     },
     // J1/J2 at WAREHOUSE width (round-4 ask #7): the reference's UC#1
     // loops six tables (configuration.properties:9-15); here all eight
-    // fixture tables reconcile in ONE plan — each side is a union of
-    // per-table count aggregations (whole-table or per-partition), and
-    // one full outer join classifies every (table, partition) cell. The
-    // deterministic perturbations exercise all four statuses: lineitem's
-    // 'R' partition loses every 97th order (mismatched), orders' 'F'
-    // loses every 101st order (mismatched) and its 'P' partition
-    // entirely (missing_in_target), the source side drops the events
-    // 'error' partition (missing_in_source); everything else matches.
-    // Round-22 restructure (guide §7.3 planning cost, verdict ask #6):
-    // the original shape built src and tgt as UNIONS OF 8 AGGREGATIONS
-    // EACH and full-outer-joined the two 8-branch unions — a 16-branch
-    // plan whose Catalyst planning alone profiled at ~0.75 s (and at
-    // warehouse width grows with the table count), with every table
-    // scanned twice (once per side). A (table, partition) cell exists on
-    // a side iff that side has ≥1 row in it, so the join is equivalent
-    // to ONE grouped aggregation per table computing both sides' counts
-    // in a single pass — src_cnt/tgt_cnt as conditional counts,
-    // zero-to-NULL restoring exactly the join's missing-side semantics —
-    // an 8-branch union of half-width subtrees, one scan per table, no
-    // join. Output is row-identical (same status derivation; oracle-
-    // verified).
+    // fixture tables reconcile in ONE plan with ONE Reconcile.cells
+    // grouping. The deterministic perturbations exercise all four
+    // statuses: lineitem's 'R' partition loses every 97th order
+    // (mismatched), orders' 'F' loses every 101st order (mismatched) and
+    // its 'P' partition entirely (missing_in_target), the source side
+    // drops the events 'error' partition (missing_in_source); everything
+    // else matches. Each partitioned table is scanned once: its rows
+    // carry both the source's and the target's keep predicate, so one
+    // scan feeds both sides, and are counted per (value, src keep, tgt
+    // keep) before the spec is rendered — rendering it per row costs
+    // more than that small grouping. Every table then enters as count
+    // records (n = cnt), the five untouched ones as their footer-served
+    // count on both sides.
     "reconcile_warehouse" -> { (s, dir) =>
-      def nz(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = when(c > 0, c)
-      def whole(names: String*) = names.map { t =>
-        Tables.load(s, dir, t).agg(count(lit(1)).as("cnt"))
-          .select(lit(t).as("table"), lit(null).cast("string").as("partition"),
-            col("cnt").as("src_cnt"), col("cnt").as("tgt_cnt"))
+      val whole = Seq("region", "nation", "customer", "supplier", "part").map { t =>
+        Reconcile.weighted(Tables.load(s, dir, t).agg(count(lit(1)).as("cnt")),
+          Seq(lit(t).as("table"), lit(null).cast("string").as("partition")),
+          lit(true), lit(true), col("cnt"))
       }
-      def paired(df: org.apache.spark.sql.DataFrame, table: String,
-          partCol: String, srcKeep: org.apache.spark.sql.Column,
-          tgtKeep: org.apache.spark.sql.Column) =
-        df.groupBy(col(partCol))
-          .agg(nz(count(when(srcKeep, lit(1)))).as("src_cnt"),
-            nz(count(when(tgtKeep, lit(1)))).as("tgt_cnt"))
-          .select(lit(table).as("table"),
-            concat_ws("=", lit(partCol), col(partCol).cast("string"))
-              .as("partition"),
-            col("src_cnt"), col("tgt_cnt"))
-      val li = paired(Tables.lineitem(s, dir), "lineitem", "l_returnflag",
-        lit(true),
-        !(col("l_returnflag") === "R" && col("l_orderkey") % 97 === 0))
-      val o = paired(Tables.orders(s, dir), "orders", "o_orderstatus",
-        lit(true),
-        !(col("o_orderstatus") === "F" && col("o_orderkey") % 101 === 0) &&
-          col("o_orderstatus") =!= "P")
-      val ev = paired(Tables.events(s, dir), "events", "event_type",
-        col("event_type") =!= "error", lit(true))
-      (whole("region", "nation", "customer", "supplier", "part") ++
-        Seq(li, o, ev))
-        .reduce(_ unionByName _)
+      val partitioned = Seq(
+        ("lineitem", Tables.lineitem(s, dir), "l_returnflag", lit(true),
+          !(col("l_returnflag") === "R" && col("l_orderkey") % 97 === 0)),
+        ("orders", Tables.orders(s, dir), "o_orderstatus", lit(true),
+          !(col("o_orderstatus") === "F" && col("o_orderkey") % 101 === 0) &&
+            col("o_orderstatus") =!= "P"),
+        ("events", Tables.events(s, dir), "event_type",
+          col("event_type") =!= "error", lit(true))
+      ).map { case (t, df, partCol, inSrc, inTgt) =>
+        val byValue = df.groupBy(Tables.column(partCol), inSrc.as("in_src"), inTgt.as("in_tgt"))
+          .agg(count(lit(1)).as("cnt"))
+        Reconcile.weighted(byValue,
+          Seq(lit(t).as("table"), PartitionCounts.spec(Seq(partCol)).as("partition")),
+          col("in_src"), col("in_tgt"), col("cnt"))
+      }
+      Reconcile.cells((whole ++ partitioned).reduce(_ union _), Seq("table", "partition"))
         .select(col("table").as("table_name"),
           col("partition").as("partition_spec"),
           col("src_cnt"), col("tgt_cnt"),
-          when(col("src_cnt").isNull, Reconcile.MissingInSource)
-            .when(col("tgt_cnt").isNull, Reconcile.MissingInTarget)
-            .when(col("src_cnt") === col("tgt_cnt"), Reconcile.Matched)
-            .otherwise(Reconcile.Mismatched)
-            .as("status"))
+          Reconcile.status(col("src_cnt"), col("tgt_cnt")).as("status"))
     },
     // A3: per-partition integrity check via order-insensitive digests
     // (count + bit_xor of row hashes); the digest columns themselves are

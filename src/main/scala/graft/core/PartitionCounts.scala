@@ -43,25 +43,35 @@ object PartitionCounts {
     */
   def perPartition(df: DataFrame, table: String, partCols: Seq[String]): DataFrame = {
     require(partCols.nonEmpty, "perPartition requires at least one partition column")
-    df.groupBy(partCols.map(col): _*)
+    df.groupBy(partCols.map(Tables.column): _*)
       .agg(count(lit(1)).as("cnt"))
       .select(lit(table).as("table"), spec(partCols).as("partition"), col("cnt"))
   }
 
-  /** The canonical `k=v[/k2=v2]` spec of a row's partition values. A NULL
-    * value renders as the bare key (`concat_ws` skips nulls).
+  /** The canonical `k=v[/k2=v2]` spec of a row's partition values. `%`,
+    * `/` and `=` in keys and values are escaped as `%25`, `%2F`, `%3D`
+    * (the part of Hive's partition-path escaping that can make two
+    * distinct partitions render alike). A NULL value renders as the bare
+    * key (`concat_ws` skips nulls).
     */
-  def spec(partCols: Seq[String]): Column =
-    concat_ws("/", partCols.map(c => concat_ws("=", lit(c), col(c).cast("string"))): _*)
+  def spec(partCols: Seq[String]): Column = {
+    val escapes = Seq("%" -> "%25", "/" -> "%2F", "=" -> "%3D")
+    def escapeKey(k: String) = escapes.foldLeft(k) { case (s, (a, b)) => s.replace(a, b) }
+    def escapeValue(v: Column) =
+      escapes.foldLeft(v) { case (c, (a, b)) => replace(c, lit(a), lit(b)) }
+    concat_ws("/", partCols.map(c =>
+      concat_ws("=", lit(escapeKey(c)), escapeValue(Tables.column(c).cast("string")))): _*)
+  }
 
-  /** Counts for a list of tables in one DataFrame: per-partition where
-    * partition columns are given, whole-table otherwise. Mirrors the
-    * reference's table loop (verizon_automation_script.sh:96-127) as a
-    * union inside ONE query. Each branch keeps its own aggregation, so
-    * the plan has one shuffle per table, each table is scanned once, and
-    * adaptive execution submits the T shuffle stages side by side.
-    * `ReconcilePipeline` does not use this: it folds every table and both
-    * sides into a single aggregation.
+  /** Count records for a list of tables in one DataFrame: per-partition
+    * where partition columns are given, whole-table otherwise. Mirrors
+    * the reference's table loop (verizon_automation_script.sh:96-127) as
+    * a union inside ONE query. Each branch keeps its own aggregation, so
+    * each table is scanned once and adaptive execution submits the T
+    * shuffle stages side by side. This is UC#1's first half on its own;
+    * comparing two sides' records is [[Reconcile.counts]].
+    * `ReconcilePipeline` does not use it: it feeds every table's rows on
+    * both sides straight into one [[Reconcile.cells]] grouping.
     */
   def forTables(
       spark: SparkSession,

@@ -18,10 +18,8 @@ import org.apache.spark.sql.DataFrame
   */
 object Sample {
 
-  def limitN(df: DataFrame, n: Int): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    df.orderBy(df.columns.sorted.map(col).toSeq: _*).limit(n)
-  }
+  def limitN(df: DataFrame, n: Int): DataFrame =
+    df.orderBy(df.columns.sorted.map(Tables.column).toSeq: _*).limit(n)
 
   def fraction(df: DataFrame, pct: Double, seed: Long = 42L): DataFrame =
     df.sample(withReplacement = false, pct / 100.0, seed)

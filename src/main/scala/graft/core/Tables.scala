@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
@@ -22,6 +22,12 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** The column with exactly this name: quoted, so a dot or backtick in
+    * the name is part of it (`col("a.b")` would look for a field `b`
+    * of a column `a`).
+    */
+  def column(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")

@@ -349,7 +349,7 @@ case class AsOfRewriteRule(session: SparkSession)
     * }}}
     *
     * Decorrelation turns it into the domain sandwich with a ranking
-    * stage on top (probed shape, tools/Probe):
+    * stage on top (probed shape):
     *
     * {{{
     *   Project [l.*, payloads...]
@@ -397,7 +397,7 @@ case class AsOfRewriteRule(session: SparkSession)
     // Inner = the comma-LATERAL spelling (drop no-match lefts);
     // LeftOuter = `LEFT [OUTER] JOIN LATERAL ... ON true` (keep them
     // with nulls) — identical decorrelated sandwich except the
-    // join-back type (probed both, tools/Probe), and the operator's
+    // join-back type (probed both), and the operator's
     // null-match output IS the left-outer semantics directly
     case Join(l, rightSide, jt, Some(cond), _)
         if jt == Inner || jt == LeftOuter =>
@@ -406,8 +406,8 @@ case class AsOfRewriteRule(session: SparkSession)
       //    Filter(isnotnull...)}* > Join(domAgg, r, Inner, theta).
       //    Optimizer passes interleave extra nodes on real tables:
       //    InferFiltersFromConstraints adds isnotnull on the join keys
-      //    and InferWindowGroupLimit re-fires around it (probed shape,
-      //    tools/Probe) — so the walk collects them for verification
+      //    and InferWindowGroupLimit re-fires around it (probed shape)
+      //    — so the walk collects them for verification
       //    instead of demanding one fixed layering.
       def peelProjects(plan: LogicalPlan): Option[LogicalPlan] = plan match {
         case Project(list, child) =>

@@ -40,9 +40,19 @@ class PlanAuditSpec extends SparkFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
 
+  private val reconcileQueries = Seq("reconcile_report", "reconcile_matched",
+    "reconcile_warehouse", "integrity_by_partition", "integrity_multilevel")
+
   test("aggregations combine map-side (partial aggregation present)") {
-    for (q <- Seq("q1_agg", "rowcount_by_partition", "orders_by_month")) {
+    for (q <- Seq("q1_agg", "rowcount_by_partition", "orders_by_month") ++ reconcileQueries) {
       assert(plan(q).contains("partial_"), s"$q lost map-side combine")
+    }
+  }
+
+  test("reconcile queries compare both sides in one grouping, never a join") {
+    for (q <- reconcileQueries; p = plan(q);
+         j <- Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")) {
+      assert(!p.contains(j), s"$q plans a $j:\n$p")
     }
   }
 

@@ -80,6 +80,42 @@ object EngineProperties extends Properties("graft") {
       Reconcile.counts(df, df).filter(col("status") =!= "matched").count() == 0
     }
 
+  private val cellRowsGen: Gen[List[(Int, Option[String])]] =
+    Gen.choose(0, 8).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, 5), Gen.option(Gen.oneOf("a", "b", "c")))))
+
+  property("pipeline, Reconcile.counts and Fingerprint.compare agree cell by cell") =
+    forAll(cellRowsGen, cellRowsGen, Gen.listOfN(8, Gen.prob(0.7))) { (src, extra, keep) =>
+      // the target keeps a random subset of the source rows and adds a few
+      // of its own: cells end up matched, mismatched or one-sided, some
+      // with a NULL partition value
+      val tgt = src.zip(keep).collect { case (r, true) => r } ++ extra.take(3)
+      val sides = Seq(src, tgt).map(_.toDF("id", "p"))
+      // "t" by partition, "w" the same rows as one whole-table cell
+      val tables = Seq("t" -> Seq("p"), "w" -> Nil)
+      val dirs = sides.map { df =>
+        val dir = java.nio.file.Files.createTempDirectory("front_doors").toString
+        for ((name, _) <- tables) df.write.parquet(s"$dir/$name.parquet")
+        dir
+      }
+      try {
+        val p = new ReconcilePipeline(spark, dirs(0), dirs(1), tables)
+        val counts = Reconcile.counts(PartitionCounts.forTables(spark, dirs(0), tables),
+          PartitionCounts.forTables(spark, dirs(1), tables))
+        val compared = Map(
+          "t" -> Fingerprint.compare(sides(0), sides(1), Seq("p")).collect()
+            .map(r => (Option(r.getString(0)).fold("p")("p=" + _), r.getBoolean(3))),
+          "w" -> Fingerprint.compare(sides(0), sides(1), Nil).collect()
+            .map(r => (null: String, r.getBoolean(2))))
+        val report = p.report.collect().toSet
+        val matchedTables = report.filter(_.getString(4) == "matched").map(_.getString(0))
+        val integrity = p.integrity().collect()
+          .map(r => (r.getString(0), (r.getString(1), r.getBoolean(4)))).toSet
+        report == counts.collect().toSet &&
+          integrity == matchedTables.flatMap(t => compared(t).map(t -> _))
+      } finally dirs.foreach(Scratch.rmTree)
+    }
+
   property("exact dedup is idempotent") =
     forAll(rowsGen) { rows =>
       val df = rows.toDF("id", "s")

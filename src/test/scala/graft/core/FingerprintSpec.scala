@@ -61,6 +61,13 @@ class FingerprintSpec extends SparkFunSuite {
     assert(got == Set((Some("x"), 1L, 1L, true), (None, 2L, 2L, true)))
   }
 
+  test("compare accepts group columns named like its own working columns") {
+    val rows = Seq((1, 10, "x"), (1, 11, "y"), (2, 10, "z")).toDF("n", "h", "v")
+    val got = Fingerprint.compare(rows, rows.filter("v <> 'z'"), Seq("n", "h")).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getBoolean(4))).toSet
+    assert(got == Set((1, 10, true), (1, 11, true), (2, 10, false)))
+  }
+
   test("sampled digest is deterministic across physical layouts") {
     val df = Tables.lineitem(spark, sf001)
     val d1 = Fingerprint.sampled(df, "lineitem", 10).select("digest").head.getString(0)

@@ -84,6 +84,32 @@ class ReconcilePipelineSpec extends SparkFunSuite {
       Row("t", "p=c", null, 1L, false)))
   }
 
+  test("distinct multi-level partitions whose values hold / and = stay distinct cells") {
+    val dir = warehouse("t" -> Seq((1, "a/p2=b", "c"), (2, "a", "b/p2=c")).toDF("id", "p1", "p2"))
+    val p = new ReconcilePipeline(spark, dir, dir, Seq("t" -> Seq("p1", "p2")))
+    assert(rowsOf(p.report) == Set(
+      Row("t", "p1=a%2Fp2%3Db/p2=c", 1L, 1L, "matched"),
+      Row("t", "p1=a/p2=b%2Fp2%3Dc", 1L, 1L, "matched")))
+  }
+
+  test("column names holding a dot or a backtick reconcile on every path") {
+    val t = Seq((1, "x", "k1"), (2, "y", "k1"), (3, "z", "k2")).toDF("id", "a.b", "p.`q")
+    val u = Seq((1, "x"), (2, "y"), (3, "z")).toDF("id", "a.b")
+    val src = warehouse("t" -> t, "u" -> u)
+    val tgt = warehouse("t" -> t.filter("id <> 3"), "u" -> u)
+    val p = new ReconcilePipeline(spark, src, tgt, Seq("t" -> Seq("p.`q"), "u" -> Nil))
+    assert(rowsOf(p.report) == Set(
+      Row("t", "p.`q=k1", 2L, 2L, "matched"),
+      Row("t", "p.`q=k2", 1L, null, "missing_in_target"),
+      Row("u", null, 3L, 3L, "matched")))
+    val expected = Set(
+      Row("t", "p.`q=k1", 2L, 2L, true),
+      Row("t", "p.`q=k2", 1L, null, false),
+      Row("u", null, 3L, 3L, true))
+    assert(rowsOf(p.integrity()) == expected)
+    assert(rowsOf(p.integrity(sampled = true)) == expected)
+  }
+
   test("report, integrity and writeReports read each source and target row once") {
     val src = warehouse(
       "t" -> spark.range(2000).selectExpr("id", "cast(id % 7 AS string) AS p", "id * 3 AS v"),
